@@ -411,6 +411,7 @@ def run_dedup_stream(
     second run touching only batch-2 docs, and the final corpus matching
     a from-scratch batch dedup of the union — for text AND the
     perceptual modalities."""
+    from filemap_spark.io import read_parquet
     from filemap_spark.operators.text import (
         _recover_compact_swap,
         incremental_lsh_ingest,
@@ -430,7 +431,7 @@ def run_dedup_stream(
     # every historical pair (review finding, round 10; the three state
     # tables get the same healing inside incremental_lsh_ingest itself)
     _recover_compact_swap(pairs_dir)
-    schema = spark.read.parquet(input_dir).schema
+    schema = read_parquet(spark, input_dir).schema
 
     if modality == "text":
 
@@ -495,7 +496,7 @@ def run_dedup_stream(
     edges = spark.read.parquet(pairs_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    docs = spark.read.parquet(input_dir)
+    docs = read_parquet(spark, input_dir)
     clean = _survivors_from_pairs(docs, edges)
     out = os.path.join(output, "documents.parquet")
     clean.write.mode("overwrite").parquet(out)

@@ -382,7 +382,7 @@ def _jaccard_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        table_fingerprint(sf_dir, "documents"),
+        table_fingerprint(f"{sf_dir}/documents.parquet"),
     )
     if key not in _CC_LABELS_CACHE:
         from filemap_spark.operators.text import dedup_near_jaccard

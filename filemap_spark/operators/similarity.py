@@ -94,7 +94,7 @@ def _index_location(sf_dir: str) -> tuple[str, tuple]:
     from filemap_spark.io import table_fingerprint
 
     path = os.path.join(sf_dir, "embeddings.parquet")
-    return path, table_fingerprint(sf_dir, "embeddings")
+    return path, table_fingerprint(path)
 
 
 # Streaming brute-force geometry: worker memory is bounded by

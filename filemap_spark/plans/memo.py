@@ -26,6 +26,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from filemap_spark.io import read_parquet
+
 _DEFAULT_WAREHOUSE = os.path.join(tempfile.gettempdir(), "filemap_warehouse")
 
 
@@ -116,7 +118,7 @@ def cached_by_key(
             # of returning a scan over a deleted directory.
             hit = os.path.exists(marker)
         if hit:
-            return spark.read.parquet(out), True
+            return read_parquet(spark, out), True
     # Materialize to a temp dir and atomically rename into place: writing the
     # final path directly with overwrite races concurrent sessions sharing a
     # warehouse (overwrite deletes _SUCCESS mid-flight under a reader that
@@ -144,7 +146,7 @@ def cached_by_key(
     max_bytes = os.environ.get("FILEMAP_WAREHOUSE_MAX_BYTES")
     if max_bytes:
         evict_lru(warehouse, int(max_bytes))
-    return spark.read.parquet(out), False
+    return read_parquet(spark, out), False
 
 
 def cached(

@@ -43,11 +43,27 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _worker_pythonpath() -> str | None:
+    """The directory holding this package when it is not installed, else None.
+
+    Python workers import from Spark's own path, the site directories and
+    PYTHONPATH. A package imported from a checkout (through the driver's
+    working directory or a `sys.path` edit) is invisible to them once the
+    driver runs from another directory."""
+    import site
+
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    site_dirs = [*site.getsitepackages(), site.getusersitepackages()]
+    return None if parent in map(os.path.abspath, site_dirs) else parent
+
+
 def get_spark(app_name: str = "filemap-spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) a session configured for the contract data.
 
     Honors the driver env vars: SPARK_GRAFT_CPUS selects local parallelism.
-    On a real cluster the same confs apply; only `master` changes.
+    On a real cluster the same confs apply; only `master` changes. When the
+    package is not installed, its parent directory goes on the workers'
+    PYTHONPATH so Python UDFs can import it from any working directory.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -59,6 +75,9 @@ def get_spark(app_name: str = "filemap-spark", master: str | None = None) -> Spa
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.parquet.filterPushdown", "true")
     )
+    pythonpath = _worker_pythonpath()
+    if pythonpath is not None:
+        builder = builder.config("spark.executorEnv.PYTHONPATH", pythonpath)
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     return ensure_runtime_confs(builder.getOrCreate())

@@ -1476,6 +1476,8 @@ def test_spread_single_split_rejects_shuffled_plans(spark, sf_dir):
     spread_single_split(docs.where(F.length("text") > 0))
     # checkpoint scans are scan-like: accepted (incremental-path inputs)
     ck = docs.limit(0)  # cheap frame for plan-shape-only checks below
+    ids = docs.select("doc_id")
+    docs.createOrReplaceTempView("spread_docs")
     for bad in (
         docs.join(docs.select("doc_id"), "doc_id", "left_anti"),
         docs.groupBy("doc_id").count(),
@@ -1483,6 +1485,14 @@ def test_spread_single_split_rejects_shuffled_plans(spark, sf_dir):
         docs.distinct(),
         docs.repartition(4),
         ck.join(ck.select("doc_id"), "doc_id"),
+        docs.groupBy("doc_id").applyInPandas(lambda pdf: pdf, docs.schema),
+        docs.groupBy("doc_id")
+        .cogroup(ids.groupBy("doc_id"))
+        .applyInPandas(lambda left, _right: left, docs.schema),
+        ids.intersect(ids),
+        ids.exceptAll(ids),
+        spark.sql("SELECT DISTINCT doc_id FROM spread_docs"),
+        spark.sql("SELECT /*+ REBALANCE */ * FROM spread_docs"),
     ):
         with _pytest.raises(ValueError, match="scan-only"):
             spread_single_split(bad)

@@ -27,6 +27,16 @@ Semantics preserved from the reference:
   (filemap forks per file; `--partitions` recovers per-file granularity);
 - reduce = shuffle records by their leading whitespace-delimited field into
   hash buckets, then one shell pipeline per bucket;
+- shells run on the executor JVM (`JavaRDD.pipe`, see `_pipe`): lines go
+  from the scan to the shell's stdin and from its stdout to the writer
+  without a Python worker. Lines are UTF-8 both ways; output splits on
+  `\n`, `\r\n` or `\r`, as Spark's text reader splits input. A shell's
+  exit status is ignored (`grep` with no match is an empty partition, not
+  a failure). The shell inherits the executor's environment (PATH, HOME,
+  locale) and runs in its working directory, which in local mode is the
+  driver's cwd — as a shell or filemap would run it. Reduce buckets hash
+  the key with Spark's Murmur3: each key lands in exactly one of the
+  `--buckets` buckets, one shell each;
 - memoization: with `--memo`, a run whose (inputs, commands) fingerprint
   already produced OUTPUT is skipped — filemap's make-like rule. The
   fingerprint covers input file names/sizes/mtimes and both command
@@ -52,7 +62,7 @@ import json
 import os
 import sys
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -92,14 +102,48 @@ def _write_memo(output: str, fp: str) -> None:
         json.dump({"fingerprint": fp}, f)
 
 
-def _shell(cmd: str) -> str:
-    # RDD.pipe shlex-tokenizes and execs without a shell; wrap so pipes,
-    # redirects, and quoting behave exactly as in the reference.
-    return "sh -c " + _sq(cmd)
+def _pipe(lines: DataFrame, cmd: str) -> DataFrame:
+    """Pipe every partition of a one-column string frame through `cmd`,
+    one `sh` per partition, on the executor JVM; returns the output lines
+    as a `value` string frame.
+
+    `Dataset[String].javaRDD().pipe` feeds the rows to the shell and reads
+    its stdout back as JVM strings: no Python worker, no pickling, no
+    round trip through the driver. The encoding is UTF-8 on both pipes
+    (the JVM's default charset follows the locale and is ASCII under a
+    POSIX one). The outer shell runs `cmd` in an inner `sh` and exits 0,
+    so the command's own exit status is ignored; the command string is
+    passed as a positional argument, never re-quoted. The environment is
+    the executor's own (no variables added)."""
+    spark = lines.sparkSession
+    jvm = spark._jvm
+    argv = jvm.java.util.ArrayList()
+    for a in ("sh", "-c", 'sh -c "$1"; exit 0', "sh", cmd):
+        argv.add(a)
+    strings = jvm.org.apache.spark.sql.Encoders.STRING()
+    piped = (
+        getattr(lines._jdf, "as")(strings)
+        .javaRDD()
+        .pipe(argv, jvm.java.util.HashMap(), False, 8192, "UTF-8")
+    )
+    return DataFrame(
+        spark._jsparkSession.createDataset(piped.rdd(), strings).toDF(), spark
+    )
 
 
-def _sq(s: str) -> str:
-    return "'" + s.replace("'", "'\\''") + "'"
+def _write_text_counted(df: DataFrame, output: str) -> int:
+    """Write `df` as a text dataset and return its line count, observed
+    while the write runs — no re-read of the output."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").text(output)
+    return obs.get["n"]
+
+
+def _buckets(lines: DataFrame, buckets: int) -> DataFrame:
+    """Hash-partition lines into exactly `buckets` partitions by their
+    leading space-delimited field (Murmur3; an explicit partition count,
+    so AQE does not coalesce the buckets)."""
+    return lines.repartition(buckets, F.substring_index("value", " ", 1))
 
 
 def run_map(
@@ -111,20 +155,23 @@ def run_map(
     buckets: int = 32,
     partitions: int | None = None,
 ) -> int:
-    """Execute map [+ reduce] shell stages; returns output line count."""
-    lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
+    """Execute map [+ reduce] shell stages; returns output line count.
+
+    The map pipes each input partition (or each of `partitions`
+    round-robin splits) through `cmd`; the reduce hashes the map's output
+    lines into `buckets` buckets by their leading space-delimited field
+    (Spark's Murmur3) and pipes each bucket through `reduce_cmd`. Both
+    pipe on the executor JVM (`_pipe`: UTF-8, exit status ignored,
+    executor environment inherited). A command that emits no lines
+    writes an empty output dataset; the count is observed during the
+    write."""
+    lines = spark.read.text(input_path)
     if partitions:
         lines = lines.repartition(partitions)
-    mapped = lines.pipe(_shell(cmd))
+    mapped = _pipe(lines, cmd)
     if reduce_cmd is not None:
-        keyed = mapped.map(lambda line: (line.split(" ", 1)[0], line))
-        mapped = keyed.partitionBy(buckets).values().pipe(_shell(reduce_cmd))
-    # Explicit schema: toDF() infers from data and raises on an EMPTY rdd
-    # (a map command emitting no lines, e.g. grep with no matches) — an
-    # empty pipeline must still write an empty output dataset.
-    out_df = spark.createDataFrame(mapped.map(lambda line: Row(value=line)), "value string")
-    out_df.write.mode("overwrite").text(output)
-    return spark.read.text(output).count()
+        mapped = _pipe(_buckets(mapped, buckets), reduce_cmd)
+    return _write_text_counted(mapped, output)
 
 
 def run_stage(
@@ -137,18 +184,19 @@ def run_stage(
     partitions: int | None = None,
 ) -> int:
     """One pipeline stage: `map` pipes every partition's lines through the
-    shell command; `reduce` first shuffles lines into hash buckets by their
-    leading whitespace-delimited field, then pipes each bucket."""
-    lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
+    shell command; `reduce` first shuffles lines into `buckets` hash
+    buckets by their leading space-delimited field (Spark's Murmur3 hash),
+    then pipes each bucket. The shells run on the executor JVM (`_pipe`):
+    UTF-8 lines, exit status ignored, the executor's environment and
+    working directory. Returns the stage's output line count, observed
+    during the write: the stage runs one Spark job, the write, plus one
+    per shuffle (a reduce's buckets, a `partitions` split)."""
+    lines = spark.read.text(input_path)
     if partitions:
         lines = lines.repartition(partitions)
     if kind == "reduce":
-        keyed = lines.map(lambda line: (line.split(" ", 1)[0], line))
-        lines = keyed.partitionBy(buckets).values()
-    piped = lines.pipe(_shell(cmd))
-    out_df = spark.createDataFrame(piped.map(lambda line: Row(value=line)), "value string")
-    out_df.write.mode("overwrite").text(output)
-    return spark.read.text(output).count()
+        lines = _buckets(lines, buckets)
+    return _write_text_counted(_pipe(lines, cmd), output)
 
 
 def run_pipeline(
@@ -179,7 +227,9 @@ def run_pipeline(
         fp = _fingerprint(cur, [f"{kind}\x00{cmd}"])
         if memo and _memo_hit(stage_out, fp):
             print(f"memo hit: stage {i} ({kind}) up to date", file=sys.stderr)
-            n = spark.read.text(stage_out).count()
+            # only the final stage's count is returned
+            if is_last:
+                n = spark.read.text(stage_out).count()
         else:
             n = run_stage(
                 spark, cur, stage_out, kind, cmd, buckets=buckets, partitions=partitions
@@ -194,26 +244,24 @@ def run_map_stream(
     spark: SparkSession, input_path: str, output: str, cmd: str
 ) -> int:
     """Incremental map over a directory: only files not yet recorded in the
-    checkpoint's file-source log are processed (availableNow drain)."""
+    checkpoint's file-source log are processed (availableNow drain). Each
+    micro-batch is piped once (`_pipe`) and appended to OUTPUT/data;
+    returns the line count of OUTPUT/data across all runs."""
     checkpoint = os.path.join(output, "_checkpoint")
+    data_dir = os.path.join(output, "data")
     stream = spark.readStream.format("text").load(input_path)
-    piped = stream.select(F.col("value"))
 
     def sink(batch_df, _batch_id):
-        new = batch_df.rdd.map(lambda r: r[0]).pipe(_shell(cmd))
-        if not new.isEmpty():
-            new.map(lambda line: Row(value=line)).toDF().write.mode("append").text(
-                os.path.join(output, "data")
-            )
+        # the write is the micro-batch's only action: one pipe per batch
+        _pipe(batch_df, cmd).write.mode("append").text(data_dir)
 
     q = (
-        piped.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    data_dir = os.path.join(output, "data")
     if not os.path.exists(data_dir):
         return 0
     return spark.read.text(data_dir).count()
@@ -492,15 +540,19 @@ def run_dedup_stream(
     ledger_path = os.path.join(state_dir, ledger_name)
     if not os.path.exists(ledger_path):  # empty input dir, nothing ingested
         return 0, 0
-    n_total = spark.read.parquet(ledger_path).count()
-    edges = spark.read.parquet(pairs_dir).select(
+    # both ledgers and the pairs are this function's own state: read them
+    # with declared schemas, no schema-inference job
+    n_total = spark.read.schema("doc_id long").parquet(ledger_path).count()
+    edges = spark.read.schema("doc_a long, doc_b long").parquet(pairs_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
     docs = read_parquet(spark, input_dir)
     clean = _survivors_from_pairs(docs, edges)
-    out = os.path.join(output, "documents.parquet")
-    clean.write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out).count(), n_total
+    kept = Observation()
+    clean.observe(kept, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+        os.path.join(output, "documents.parquet")
+    )
+    return kept.get["n"], n_total
 
 
 # The 22 canonical TPC-H query shapes → registry ids (corpus-adapted

@@ -245,9 +245,12 @@ def alternating_star_components(edges: DataFrame) -> DataFrame:
     full doc set (as plain label propagation does) pays per-round cost on
     data that never changes.
 
-    Each round is two groupBy/join pairs on the edge list; convergence is
-    detected by an (edge-count, xor-of-pair-hashes) checksum — one tiny agg
-    per round, never a collect of the labels."""
+    Each round is two groupBy/join pairs on the edge list. A round's
+    output (every edge u < v) is the fixed point once it is a star forest:
+    no node is the leaf `v` of two centers and no leaf is also a center.
+    Every round preserves connectivity, so a star forest whose centers are
+    smaller than their leaves is exactly the min-id labeling. The check is
+    one grouped agg per round, never a collect of the labels."""
     e = (
         edges.select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
@@ -256,7 +259,6 @@ def alternating_star_components(edges: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    prev_sig: tuple | None = None
     converged = False
     for _ in range(12):  # 2^12 nodes per component ≫ any near-dup cluster
         # large-star: every node u links its LARGER neighbors to
@@ -284,17 +286,26 @@ def alternating_star_components(edges: DataFrame) -> DataFrame:
             .distinct()
             .localCheckpoint()
         )
-        sig_row = e.agg(
-            F.count("*").alias("n"),
-            # bit_xor, not sum: xor of distinct-pair hashes cannot overflow
-            # (int64 sum would, and throws under ANSI mode)
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        sig = (sig_row["n"], sig_row["h"])
-        if sig == prev_sig:
+        # per node: its edge count and whether it is a leaf in any edge; a
+        # leaf with a second edge is either a leaf of two centers or also
+        # a center — not yet a star forest
+        ends = e.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("u").alias("node"), F.lit(False).alias("leaf")),
+                    F.struct(F.col("v").alias("node"), F.lit(True).alias("leaf")),
+                )
+            ).alias("end")
+        ).select("end.*")
+        not_star = (
+            ends.groupBy("node")
+            .agg((F.max("leaf") & (F.count("*") > 1)).alias("bad"))
+            .agg(F.max("bad").alias("bad"))
+            .first()["bad"]
+        )
+        if not not_star:  # False, or None for an empty edge list
             converged = True
             break
-        prev_sig = sig
     if not converged:
         # fail loudly: returning the non-star edge list as labels would be
         # silently-wrong components

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -849,6 +849,11 @@ def _shingle_frame(docs: DataFrame) -> DataFrame:
     )
 
 
+# The index tables incremental_lsh_ingest appends, declared so its probes
+# read them without a parquet schema-inference job.
+_LSH_SHINGLES_SCHEMA = "doc_id long, shingle string"
+_LSH_BANDS_SCHEMA = "doc_id long, band int, bucket int"
+
 # LSH geometry shared by dedup_minhash_lsh and the incremental ingest:
 # r = 4 rows/band over 128 deterministic permutations → catches jaccard ≥ ~0.6
 _LSH_HASHES, _LSH_BANDS = 128, 32
@@ -1160,9 +1165,15 @@ def incremental_lsh_ingest(
             )
         new_docs = new_docs.join(ledger.select("doc_id"), "doc_id", "left_anti")
     # pin the delta (ledger append below must not flip the anti-join);
-    # thash rides along so the dup-collapse never rehashes text
-    keyed = _keyed_by_text(new_docs).localCheckpoint()
-    if not keyed.take(1):
+    # thash rides along so the dup-collapse never rehashes text; its row
+    # count is observed while the checkpoint runs
+    unseen = Observation()
+    keyed = (
+        _keyed_by_text(new_docs)
+        .observe(unseen, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if not unseen.get["n"]:
         # nothing unseen: skip the whole band/verify machinery (a no-op
         # batch otherwise pays ~5 s of plan overhead — measured sf0.1)
         return spark.createDataFrame(
@@ -1239,9 +1250,13 @@ def incremental_lsh_ingest(
     )
 
     if have_state:
-        idx_bands = spark.read.parquet(band_path)
+        idx_bands = spark.read.schema(_LSH_BANDS_SCHEMA).parquet(band_path)
         all_bands = idx_bands.unionByName(new_bands)
-        all_sh = spark.read.parquet(sh_path).unionByName(new_sh)
+        all_sh = (
+            spark.read.schema(_LSH_SHINGLES_SCHEMA)
+            .parquet(sh_path)
+            .unionByName(new_sh)
+        )
         # a new member of an EXISTING group probes through the group's
         # stored rep bands (the group's near-dup neighborhood is not in
         # state — only the index is); one probe per touched group

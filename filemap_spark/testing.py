@@ -19,6 +19,23 @@ import pandas as pd
 from filemap_spark.io import TABLES
 
 
+def count_jobs(spark, fn) -> tuple[Any, int]:
+    """(fn(), number of Spark jobs fn submitted), counted through a job
+    group on the calling thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

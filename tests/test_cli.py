@@ -14,6 +14,7 @@ from filemap_spark.cli import (
     run_map,
     run_map_stream,
     run_pipeline,
+    run_stage,
 )
 
 
@@ -850,3 +851,155 @@ def test_decontam_verb_drops_planted_contamination(spark, tmp_path):
     assert rep[0]["n_ngrams"] == 4 and rep[0]["n_hit_ngrams"] == 1
     # chainable: stats runs over the decontaminated output
     assert run_stats(spark, out)["n_docs"] == 3
+
+
+# --- the executor-JVM pipe (`cli._pipe`) ----------------------------------
+
+
+def _part_bytes(d: str) -> bytes:
+    return b"".join(
+        open(os.path.join(d, f), "rb").read()
+        for f in sorted(os.listdir(d))
+        if f.startswith("part-")
+    )
+
+
+_ASCII_JVM_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from filemap_spark import get_spark
+from filemap_spark.cli import run_map
+spark = get_spark("pipe-charset", master="local[1]")
+print("CHARSET", spark._jvm.java.nio.charset.Charset.defaultCharset().name())
+print("LINES", run_map(spark, sys.argv[2], sys.argv[3], "cat", partitions=1))
+"""
+
+
+def test_pipe_round_trips_non_ascii_bytes(tmp_path):
+    """UTF-8 both ways, byte for byte, in a JVM whose default charset is
+    ASCII (Java 17 takes it from the locale; a POSIX locale gives ASCII)."""
+    import subprocess
+    import sys
+
+    src = tmp_path / "in"
+    lines = ["café ünï 日本", "naïve — “quoted” ✓", "plain ascii"]
+    _write_lines(str(src / "a.txt"), lines)
+    out = str(tmp_path / "out")
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        '--driver-java-options "-Dfile.encoding=US-ASCII" pyspark-shell'
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", _ASCII_JVM_SCRIPT, repo, str(src), out],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "CHARSET US-ASCII" in run.stdout, run.stdout[-2000:]
+    assert "LINES 3" in run.stdout, run.stdout[-2000:]
+    assert _part_bytes(out) == ("\n".join(lines) + "\n").encode("utf-8")
+
+
+def test_pipe_no_match_writes_empty_dataset(spark, tmp_path):
+    """`grep` with no match exits 1: an empty output, not a failure."""
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["apple", "banana"])
+    out = str(tmp_path / "out")
+    assert run_stage(spark, str(src), out, "map", "grep zzz") == 0
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert spark.read.text(out).count() == 0
+
+
+def test_pipe_ignores_exit_status(spark, tmp_path):
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["one", "two"])
+    out = str(tmp_path / "out")
+    assert run_stage(spark, str(src), out, "map", "cat; exit 3") == 2
+    assert sorted(r["value"] for r in spark.read.text(out).collect()) == ["one", "two"]
+
+
+def test_reduce_puts_each_key_in_one_bucket(spark, tmp_path):
+    """Four buckets, four shells, and every key counted in exactly one of
+    them: after `sort | uniq -c` per bucket each key appears once, with
+    its total over all input files."""
+    src = tmp_path / "in"
+    keys = [f"k{i}" for i in range(40)]
+    for f in range(3):
+        _write_lines(str(src / f"{f}.txt"), [f"{k} row{f}" for k in keys for _ in range(f + 1)])
+    out = str(tmp_path / "out")
+    n = run_stage(
+        spark, str(src), out, "reduce", "cut -d' ' -f1 | sort | uniq -c", buckets=4
+    )
+    got = [r["value"].split() for r in spark.read.text(out).collect()]
+    assert n == len(got) == len(keys)
+    assert sorted(k for _, k in got) == sorted(keys)
+    assert all(int(c) == 6 for c, _ in got)  # 1 + 2 + 3 rows per key
+
+    pids = str(tmp_path / "pids")
+    run_stage(spark, str(src), pids, "reduce", "cat >/dev/null; echo $$", buckets=4)
+    assert len({r["value"] for r in spark.read.text(pids).collect()}) == 4
+
+
+def test_partitions_flag_sets_shell_count(spark, tmp_path):
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), [str(i) for i in range(50)])
+    out = str(tmp_path / "out")
+    rc = main(["map", str(src), out, "--cmd", "cat >/dev/null; echo $$", "--partitions", "3"])
+    assert rc == 0
+    assert len({r["value"] for r in spark.read.text(out).collect()}) == 3
+
+
+def test_pipe_sees_driver_cwd_and_path(spark, tmp_path):
+    """The shell inherits the executor's environment and working directory
+    (local mode: the driver's), as a shell would run it."""
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["x"])
+    out = str(tmp_path / "out")
+    run_map(spark, str(src), out, 'cat >/dev/null; pwd; printf "%s\\n" "$PATH"', partitions=1)
+    assert _part_bytes(out).decode().splitlines() == [os.getcwd(), os.environ["PATH"]]
+
+
+def test_pipeline_submits_one_job_per_map_stage(spark, tmp_path):
+    """Job-count pin: a memo-missed map stage is one Spark job (the write;
+    its line count is observed, not re-read), a reduce stage adds its
+    shuffle, and a fully memo-hit re-run only counts the final stage."""
+    from filemap_spark.testing import count_jobs
+
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["a b a", "b a c"])
+    _write_lines(str(src / "b.txt"), ["c a"])
+    maps = [("map", "tr ' ' '\\n'"), ("map", "grep -v c"), ("map", "cat")]
+    out = str(tmp_path / "maps")
+    n, jobs = count_jobs(spark, lambda: run_pipeline(spark, str(src), out, maps, memo=True))
+    assert (n, jobs) == (6, 3)
+
+    mixed = [maps[0], ("reduce", "sort | uniq -c"), maps[2]]
+    out2 = str(tmp_path / "mixed")
+    n, jobs = count_jobs(
+        spark, lambda: run_pipeline(spark, str(src), out2, mixed, buckets=4, memo=True)
+    )
+    assert (n, jobs) == (3, 4)
+
+    final = os.path.join(out2, "final")
+    _, count_final = count_jobs(spark, lambda: spark.read.text(final).count())
+    n, jobs = count_jobs(
+        spark, lambda: run_pipeline(spark, str(src), out2, mixed, buckets=4, memo=True)
+    )
+    assert (n, jobs) == (3, count_final)
+
+
+def test_stream_pipes_each_batch_once(spark, tmp_path):
+    """A side-effecting command runs once per micro-batch line: `tee -a`
+    appends exactly the batch's lines to the counter file."""
+    src = tmp_path / "in"
+    out = str(tmp_path / "out")
+    counter = tmp_path / "counter.txt"
+    cmd = f"tee -a '{counter}'"
+    _write_lines(str(src / "a.txt"), ["one", "two"])
+    _write_lines(str(src / "b.txt"), ["three"])
+    assert run_map_stream(spark, str(src), out, cmd) == 3
+    assert sorted(counter.read_text().splitlines()) == ["one", "three", "two"]
+    _write_lines(str(src / "c.txt"), ["four"])
+    assert run_map_stream(spark, str(src), out, cmd) == 4
+    assert sorted(counter.read_text().splitlines()) == ["four", "one", "three", "two"]

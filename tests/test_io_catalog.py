@@ -8,7 +8,6 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -17,22 +16,9 @@ import pytest
 
 from filemap_spark import io
 from filemap_spark.io import TABLES, load_table, read_parquet, register_views
+from filemap_spark.testing import count_jobs as _jobs
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn submitted), counted through a job group."""
-    sc = spark.sparkContext
-    group = f"catalog-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture()
